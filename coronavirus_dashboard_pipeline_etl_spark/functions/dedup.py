@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from .graph import RollingPins, _release_rdds, checkpoint_pinned
 from .text import fingerprint, tokens
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -612,8 +613,6 @@ def dedup_components(
     # that OOM'd the r6 sf1 sweep driver. Only the checkpoints the
     # RETURNED lazy frame still references (initial labels + final
     # fixpoint labels) stay pinned.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
     sc = pairs.sparkSession.sparkContext
     id_set = ids.select(F.col(id_col).alias("__id"))
     # Materialise the UNDIRECTED pair list once, evenly spread (the
@@ -624,16 +623,11 @@ def dedup_components(
     # two passes (initial label aggregate, contraction map) and the
     # iteration then runs on the CONTRACTED graph only. At 10x scale
     # the old 2x-pairs edge checkpoint was a third of the resolve.
-    __b = _persistent_rdd_ids(sc)
-    kept = (
+    kept, kept_ids = checkpoint_pinned(
         pairs.select("id_a", "id_b")
         .join(id_set, F.col("id_a") == F.col("__id"), "left_semi")
         .join(id_set, F.col("id_b") == F.col("__id"), "left_semi")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    kept_ids = (
-        ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
+        .repartition(sc.defaultParallelism)
     )
     # The SETUP section (bidirectional edges, contraction, initial
     # labels, the bcast-sizing count) runs eager checkpoints and jobs
@@ -657,19 +651,15 @@ def dedup_components(
         # Initial label = min(node, min direct neighbour): this IS the
         # first propagation round, fused into initialisation for free (one
         # aggregation replaces a full round's join + checkpoint + count).
-        __b = _persistent_rdd_ids(sc)
-        labels = (
+        # kept pinned on success: the returned frame composes through
+        # these labels; tracked so the ERROR path can release them
+        labels, init_label_ids = checkpoint_pinned(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
                 F.col("src").alias("node"),
                 F.least(F.col("src"), F.col("__mn")).alias("label"),
             )
-            .localCheckpoint(eager=True)
-        )  # kept pinned on success: the returned frame composes through
-        # these labels; tracked so the ERROR path can release them
-        init_label_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
         )
 
         # When the edge-node set is modest, broadcast the label table into
@@ -719,31 +709,20 @@ def dedup_components(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        __b = _persistent_rdd_ids(sc)
-        edges = (
+        edges, edge_ids = checkpoint_pinned(
             cpair.unionByName(
                 cpair.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
-            )
-            .repartition(kept.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
+            ).repartition(sc.defaultParallelism)
         )
-        edge_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
-        )
-        __b = _persistent_rdd_ids(sc)
-        iter_labels = (
+        iter_labels, prev_label_ids = checkpoint_pinned(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
                 F.col("src").alias("node"),
                 F.least(F.col("src"), F.col("__mn")).alias("label"),
             )
-            .localCheckpoint(eager=True)
-        )
-        prev_label_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
         )
         # the undirected pair list has now fed its last consumers (the
         # contracted edges and the initial labels): release it before the
@@ -809,26 +788,21 @@ def dedup_components(
                 )
             )
             final = F.least(F.col("__p"), F.coalesce("__jl", "__p"))
-            __b = _persistent_rdd_ids(sc)
-            new = (
-                prop.join(jmp, prop["__p"] == F.col("__jn"), "left")
-                .select(
+            new, new_ids = checkpoint_pinned(
+                prop.join(jmp, prop["__p"] == F.col("__jn"), "left").select(
                     "node",
                     final.alias("label"),
                     # convergence flag computed inside the same projection —
                     # no extra join per round just to count moved labels
                     (final < F.col("__orig")).alias("moved"),
                 )
-                .localCheckpoint(eager=True)
             )
             changed = new.filter("moved").count()
             # the previous round's label blocks fed this round's propagate
             # and are now dead — rolling release keeps ONE label table
             # pinned, not max_iter of them
-            if __b is not None:
-                __a = _persistent_rdd_ids(sc) or set()
-                _release_rdds(sc, prev_label_ids)
-                prev_label_ids = __a - __b
+            _release_rdds(sc, prev_label_ids)
+            prev_label_ids = new_ids
             labels = new.drop("moved")
             if changed == 0:
                 break
@@ -1973,11 +1947,10 @@ def fp_store_pruned(
     return df.filter(F.col(STORE_BUCKET).isin(touched)).drop(STORE_BUCKET)
 
 
-#: rolling-release registry for minhash_probe_pairs' default mode:
-#: id(SparkContext) -> (weakref to the context, RDD ids the LAST
-#: default-mode probe pinned). The next probe on the same context
-#: releases them (see the lifecycle note in the docstring).
-_PROBE_PINNED: dict[int, tuple] = {}
+#: rolling-release holder for minhash_probe_pairs' default mode: the
+#: next probe on the same context releases the RDD ids the last
+#: default-mode probe pinned (see the lifecycle note in the docstring).
+_PROBE_PINNED = RollingPins()
 
 
 def minhash_probe_pairs(
@@ -2109,29 +2082,16 @@ def minhash_probe_pairs(
     # it each consumer re-executes the band join INCLUDING the corpus
     # signature build, the probe's dominant cost (measured 27.2 s ->
     # 11.5 s at sf1). The materialised rows are candidate-pair-sized.
-    # localCheckpoint registers its RDD as persistent AT CALL TIME
-    # (materialisation comes later), so a before/after id diff here
-    # captures exactly the blocks this probe pinned.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
     sc = batch.sparkSession.sparkContext
     if cache_out is None:
-        prev = _PROBE_PINNED.pop(id(sc), None)
-        if prev is not None and prev[0]() is sc:
-            _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    cand = (
+        _PROBE_PINNED.release(sc)
+    cand, pinned = checkpoint_pinned(
         band_rows(sig_b, "new_id")
         .join(corpus_band_rows, ["band", "sig"])
         .select("new_id", "old_id")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
     if cache_out is not None:
         cache_out.append(cand)
 
@@ -2163,12 +2123,9 @@ def minhash_probe_pairs(
     # NEXT default-mode probe on this context releases them — one
     # probe per batch in a long-lived driver then never accumulates
     # pinned candidate-pair blocks (r8 advice), and nothing depends on
-    # garbage-collection timing. The weakref guards against an id()
-    # collision after the original context is collected.
-    if cache_out is None and pinned:
-        import weakref
-
-        _PROBE_PINNED[id(sc)] = (weakref.ref(sc), pinned)
+    # garbage-collection timing.
+    if cache_out is None:
+        _PROBE_PINNED.hold(sc, pinned)
     return result
 
 
@@ -2934,11 +2891,11 @@ def shared_spans(
     )
 
 
-#: rolling-release registry for cut_hot_spans' gram-index checkpoint:
-#: id(SparkContext) -> (weakref, pinned RDD ids) — same protocol as
-#: _PROBE_PINNED/_BLOOM_PINNED (the next default-mode call releases
-#: the previous call's blocks; stats_out=[] takes ownership instead).
-_CUT_PINNED: dict[int, tuple] = {}
+#: rolling-release holder for cut_hot_spans' gram-index checkpoint —
+#: same protocol as _PROBE_PINNED/_BLOOM_PINNED (the next default-mode
+#: call releases the previous call's blocks; stats_out=[] takes
+#: ownership instead).
+_CUT_PINNED = RollingPins()
 
 
 def cut_hot_spans(
@@ -3012,22 +2969,14 @@ def cut_hot_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-    from .graph import _persistent_rdd_ids, _release_rdds
-
     sc = df.sparkSession.sparkContext
     if stats_out is None:
-        prev = _CUT_PINNED.pop(id(sc), None)
-        if prev is not None and prev[0]() is sc:
-            _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    g = base.select(F.col(id_col), F.posexplode(fps).alias("pos", "fp"))
+        _CUT_PINNED.release(sc)
     # one materialisation feeds the stats pass AND the occurrence join
-    g = g.localCheckpoint(eager=False)
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
+    g, pinned = checkpoint_pinned(
+        base.select(F.col(id_col), F.posexplode(fps).alias("pos", "fp")),
+        eager=False,
+    )
     freq = g.groupBy("fp").agg(F.count_distinct(id_col).alias("__d"))
     if stats_out is not None:
         stats_out.append(freq)
@@ -3049,20 +2998,18 @@ def cut_hot_spans(
     # rolling-release registration (mirrors minhash_probe_pairs): the
     # NEXT default-mode call on this context frees this call's gram-
     # index blocks; stats_out=[] transfers ownership to the caller
-    if stats_out is None and pinned:
-        import weakref
-
-        _CUT_PINNED[id(sc)] = (weakref.ref(sc), pinned)
+    if stats_out is None:
+        _CUT_PINNED.hold(sc, pinned)
     return joined.select(
         F.col(id_col), F.array_join(kept, " ").alias(text_col)
     )
 
 
-#: rolling-release registry for dedup_incremental_bloom's maybe-set
-#: checkpoint: id(SparkContext) -> (weakref, pinned RDD ids) — same
-#: protocol as _PROBE_PINNED (the next call releases the previous
-#: call's blocks; see minhash_probe_pairs' lifecycle docstring).
-_BLOOM_PINNED: dict[int, tuple] = {}
+#: rolling-release holder for dedup_incremental_bloom's maybe-set
+#: checkpoint — same protocol as _PROBE_PINNED (the next call releases
+#: the previous call's blocks; see minhash_probe_pairs' lifecycle
+#: docstring).
+_BLOOM_PINNED = RollingPins()
 
 
 def dedup_incremental_bloom(
@@ -3176,23 +3123,10 @@ def dedup_incremental_bloom(
     # at most one call's (<= max_maybe_fps rows of) blocks. Contract:
     # finish consuming one call's result before the next call on the
     # same SparkContext.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
     sc = new_batch.sparkSession.sparkContext
-    prev = _BLOOM_PINNED.pop(id(sc), None)
-    if prev is not None and prev[0]() is sc:
-        _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    maybe = maybe.localCheckpoint(eager=False)
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
-    if pinned:
-        import weakref
-
-        _BLOOM_PINNED[id(sc)] = (weakref.ref(sc), pinned)
+    _BLOOM_PINNED.release(sc)
+    maybe, pinned = checkpoint_pinned(maybe, eager=False)
+    _BLOOM_PINNED.hold(sc, pinned)
     n_probe = maybe.limit(max_maybe_fps + 1).count()
     if n_probe > max_maybe_fps:
         raise RuntimeError(

@@ -27,6 +27,7 @@ round, bounding the plan the way ``dedup_components`` does.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
@@ -40,8 +41,8 @@ def _persistent_rdd_ids(sc) -> set[int] | None:
     skip rolling release and keep the pre-r7 pin-until-session-end
     behavior rather than failing).
 
-    CONCURRENCY CONTRACT: the before/after set-diff protocol both
-    iterative operators use (snapshot ids, checkpoint, diff) assumes no
+    CONCURRENCY CONTRACT: the before/after set-diff protocol of
+    ``checkpoint_pinned`` (snapshot ids, checkpoint, diff) assumes no
     OTHER thread creates persistent RDDs on this SparkContext inside
     the window — a concurrent job's localCheckpoint landing in the diff
     would later be unpersisted by us, and localCheckpoint blocks are
@@ -66,6 +67,57 @@ def _release_rdds(sc, ids) -> None:
                 rdd.unpersist(False)
     except Exception:  # noqa: BLE001
         pass
+
+
+def checkpoint_pinned(
+    df: DataFrame, eager: bool = True
+) -> tuple[DataFrame, set[int]]:
+    """``df.localCheckpoint(eager)`` plus the RDD ids it pinned.
+
+    Checkpoint blocks are not cache-manager entries (``unpersist`` is a
+    no-op for them), so the only way to free them is by RDD id —
+    ``_release_rdds(sc, ids)`` once the last consumer has run. A lazy
+    checkpoint registers its RDD at call time, so the ids are known
+    before materialisation. The ids are empty when the backend does not
+    expose the block registry (the checkpoint then stays pinned for the
+    session). A failed eager materialisation releases what it pinned
+    before the error propagates. Shares the single-threaded contract of
+    ``_persistent_rdd_ids``."""
+    sc = df.sparkSession.sparkContext
+    before = _persistent_rdd_ids(sc)
+
+    def pinned() -> set[int]:
+        if before is None:
+            return set()
+        return (_persistent_rdd_ids(sc) or set()) - before
+
+    try:
+        out = df.localCheckpoint(eager=eager)
+    except BaseException:
+        _release_rdds(sc, pinned())
+        raise
+    return out, pinned()
+
+
+class RollingPins:
+    """Per-SparkContext holder for the checkpoint ids of an operator's
+    LAST call: ``release(sc)`` frees them, ``hold(sc, ids)`` registers
+    the current call's. A long-lived driver calling the operator once
+    per batch then pins at most one call's blocks, with no garbage-
+    collector timing involved. The weakref guards against an id()
+    collision after the original context is collected."""
+
+    def __init__(self) -> None:
+        self._held: dict[int, tuple] = {}
+
+    def release(self, sc) -> None:
+        prev = self._held.pop(id(sc), None)
+        if prev is not None and prev[0]() is sc:
+            _release_rdds(sc, prev[1])
+
+    def hold(self, sc, ids: set[int]) -> None:
+        if ids:
+            self._held[id(sc)] = (weakref.ref(sc), ids)
 
 
 def pagerank_fixed_point(
@@ -244,12 +296,10 @@ def pagerank_fixed_point(
             # deg is partitioned by src, incoming by dst (its agg key):
             # both sides arrive partitioned on their join key — no
             # exchange beyond the 1-row broadcast
-            before = _persistent_rdd_ids(sc)
-            ranks = (
+            ranks, round_ids = checkpoint_pinned(
                 joined.withColumn(
                     "__inc", F.expr("coalesce(incoming, 0L)") + share
-                )
-                .select(
+                ).select(
                     "src",
                     "outdeg",
                     (
@@ -259,12 +309,9 @@ def pagerank_fixed_point(
                         )
                     ).alias("rank_int"),
                 )
-                .localCheckpoint(eager=True)
             )
-            if before is not None:
-                after = _persistent_rdd_ids(sc) or set()
-                _release_rdds(sc, prev_round_ids)
-                prev_round_ids = after - before
+            _release_rdds(sc, prev_round_ids)
+            prev_round_ids = round_ids
         # materialise the final ranks — the operator returns a
         # self-contained frame and leaves no cache residue in a
         # long-lived session beyond the returned checkpoint itself

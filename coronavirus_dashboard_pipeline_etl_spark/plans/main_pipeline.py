@@ -278,7 +278,9 @@ def merge_upsert_store(
     granularity. ``write_store``'s dynamic overwrite REPLACES a
     partition wholesale; this keeps existing rows whose hash the batch
     doesn't carry — the semantic a partial re-run or late-metric
-    backfill needs.
+    backfill needs. It is the store's only hash-upsert: streaming sinks
+    call it from ``foreachBatch``. A missing path or an empty directory
+    is a first write (``sources.dump_load.read_parquet_if_present``).
 
     1. Batch dedup: the reference keeps the FIRST duplicate in frame
        order; a distributed frame has no frame order, so the twin keeps
@@ -293,7 +295,9 @@ def merge_upsert_store(
        their (hash, partition_id) is absent from the batch; batch rows
        always land. The reference updates ONLY payload on conflict,
        but a hash match implies every identity column matches, so
-       batch-row-wins IS payload-update.
+       batch-row-wins IS payload-update. This is
+       ``sources.dump_load.merge_upsert`` on (hash, partition_id), so
+       the batch must carry exactly the store's columns.
     4. The merged affected partitions are localCheckpoint-materialised
        (the plan reads the same files the dynamic overwrite is about
        to replace), then written with dynamic partition overwrite —
@@ -302,10 +306,10 @@ def merge_upsert_store(
        (Delta/Iceberg) instead of checkpoint+overwrite; the semantics
        here are the contract.
     """
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Window
 
-    from ..functions.graph import _persistent_rdd_ids, _release_rdds
+    from ..functions.graph import _release_rdds, checkpoint_pinned
+    from ..sources.dump_load import merge_upsert, read_parquet_if_present
 
     spark = incoming.sparkSession
     w = Window.partitionBy("hash", "partition_id").orderBy(
@@ -316,15 +320,12 @@ def merge_upsert_store(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # FS-agnostic existence probe: an os.path check only sees the local
-    # filesystem — on HDFS/S3 an existing store would read as absent and
-    # the first-write fallback's dynamic overwrite would wholesale-
-    # replace the batch's partitions, losing every non-conflicting row.
-    # Probe through Spark's reader instead (missing path OR an empty
-    # schema-less directory both raise AnalysisException).
-    try:
-        existing_all = spark.read.parquet(path)
-    except AnalysisException:
+    # probe through Spark's reader, not os.path: an os.path check only
+    # sees the local filesystem, so on HDFS/S3 an existing store would
+    # read as absent and the first-write branch would replace the
+    # batch's partitions wholesale
+    existing_all = read_parquet_if_present(spark.read, path)
+    if existing_all is None:
         write_store(inc, path)
         return
     parts = (
@@ -341,27 +342,16 @@ def merge_upsert_store(
         )
     affected = [r["partition_id"] for r in parts]
     existing = existing_all.filter(F.col("partition_id").isin(affected))
-    survivors = existing.join(
-        inc.select("hash", "partition_id"),
-        ["hash", "partition_id"],
-        "left_anti",
-    )
-    # the checkpoint blocks are not cache-manager entries (unpersist is
-    # a no-op for them); release by RDD id once the write has consumed
-    # them, else every merge pins its partitions' rows for the session
-    # — the accumulation class that OOM'd the r6 sweep driver
-    sc = spark.sparkContext
-    __b = _persistent_rdd_ids(sc)
-    merged = inc.unionByName(survivors.select(*inc.columns)).localCheckpoint(
-        eager=True
-    )
-    merged_ids = (
-        ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
+    # the checkpoint blocks are released by RDD id once the write has
+    # consumed them, else every merge pins its partitions' rows for the
+    # session — the accumulation class that OOM'd the r6 sweep driver
+    merged, merged_ids = checkpoint_pinned(
+        merge_upsert(existing, inc, ["hash", "partition_id"])
     )
     try:
         write_store(merged, path)
     finally:
-        _release_rdds(sc, merged_ids)
+        _release_rdds(spark.sparkContext, merged_ids)
 
 
 def run_main(
@@ -418,9 +408,8 @@ def compact_store(
     (localCheckpoint) before its files are overwritten, so a task retry
     mid-overwrite re-reads executor blocks, never half-replaced files.
     """
-    from ..functions.graph import _persistent_rdd_ids, _release_rdds
+    from ..functions.graph import _release_rdds, checkpoint_pinned
 
-    sc = spark.sparkContext
     store = spark.read.parquet(path)
     # ONE grouped count for every selected partition (not a count-scan
     # per partition); the rewrites that follow each scan only their own
@@ -438,34 +427,16 @@ def compact_store(
         # must never stream from the very files it is replacing (the
         # same-partition reader/writer hazard the contract above
         # documents — localCheckpoint severs the scan dependency, at a
-        # cost bounded by one partition's rows, so a task retry
-        # mid-overwrite re-reads executor blocks, not half-replaced
-        # files)
-        # rolling release by RDD id (graph._release_rdds): a plain
-        # DataFrame.unpersist() is a NO-OP for localCheckpoint blocks
-        # (they are not cache-manager entries), which would pin every
-        # compacted partition's rows for the session — the same
-        # accumulation class that OOM'd the r6 sweep driver
-        __b = _persistent_rdd_ids(sc)
-        part_df = (
-            store.filter(F.col("partition_id") == pid)
-            .coalesce(n_files)
-            .localCheckpoint(eager=True)
-        )
-        part_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b)
-            if __b is not None
-            else set()
+        # cost bounded by one partition's rows). The blocks are
+        # released by RDD id after the write, else every compacted
+        # partition's rows stay pinned for the session.
+        part_df, part_ids = checkpoint_pinned(
+            store.filter(F.col("partition_id") == pid).coalesce(n_files)
         )
         try:
-            (
-                part_df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_id")
-                .parquet(path)
-            )
+            write_store(part_df, path)
         finally:
-            _release_rdds(sc, part_ids)
+            _release_rdds(spark.sparkContext, part_ids)
         written[pid] = n_files
     return written
 

@@ -33,9 +33,10 @@ from __future__ import annotations
 import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
-__all__ = ["dump_table", "load_dump", "merge_upsert"]
+__all__ = ["dump_table", "load_dump", "merge_upsert", "read_parquet_if_present"]
 
 _MANIFEST = "manifest.json"
 _DATA_DIR = "data"
@@ -149,13 +150,47 @@ def merge_upsert(
 ) -> DataFrame:
     """``INSERT ... ON CONFLICT (pks) DO UPDATE`` as a set operation:
     incoming wins per primary key, existing rows with no incoming match
-    survive. Columns must agree (unionByName).
+    survive. The column sets must be equal (a ``ValueError`` names the
+    difference); the result has ``existing``'s column order.
 
     Incoming must be unique per pk (the reference's copy-to-temp-table
     has the same requirement — ON CONFLICT fires per input row); callers
     holding multi-versioned input dedup first (``dropDuplicates`` /
     ``latest_per_group``).
     """
+    only_in = sorted(set(incoming.columns) - set(existing.columns))
+    only_ex = sorted(set(existing.columns) - set(incoming.columns))
+    if only_in or only_ex:
+        raise ValueError(
+            "merge_upsert: incoming and existing columns differ — "
+            f"only in incoming: {only_in}, only in existing: {only_ex}"
+        )
     keys = list(primary_keys)
-    kept = existing.join(incoming.select(*keys).distinct(), on=keys, how="left_anti")
-    return kept.unionByName(incoming.select(*existing.columns))
+    # left_anti keeps an existing row iff NO incoming row matches its
+    # key, so duplicate keys on the right change nothing
+    kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
+    return kept.unionByName(incoming)
+
+
+#: the AnalysisException conditions that mean "no store here yet": a
+#: missing path, or a directory with no data files (empty, or holding
+#: only ``_SUCCESS``) that parquet cannot infer a schema from
+_ABSENT_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
+def read_parquet_if_present(
+    reader: DataFrameReader, path: str
+) -> DataFrame | None:
+    """``reader.parquet(path)``, or None when no store exists there yet.
+
+    The one absent-store rule for every read-modify-write store. Only an
+    absent store means "first write": any other read failure (transient
+    FS error, corrupt footer, permission blip) propagates, because a
+    caller falling through to its first-write branch would overwrite
+    the existing rows with one batch's."""
+    try:
+        return reader.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() not in _ABSENT_STORE:
+            raise
+        return None

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .dump_load import read_parquet_if_present
+
 REGISTRY_SCHEMA = StructType(
     [
         StructField("metric", StringType(), False),
@@ -37,14 +39,10 @@ def load_metric_registry(spark: SparkSession, path: str) -> DataFrame:
     transient error would make ``register_metrics`` re-number every
     metric from 1 and append conflicting duplicate (metric, id) rows,
     breaking the append-only id contract for the whole store."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(REGISTRY_SCHEMA).parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
+    registry = read_parquet_if_present(spark.read.schema(REGISTRY_SCHEMA), path)
+    if registry is None:
         return spark.createDataFrame([], REGISTRY_SCHEMA)
+    return registry
 
 
 def register_metrics(df: DataFrame, registry_path: str) -> DataFrame:

@@ -9,7 +9,7 @@ These mirror the reference's loaders:
 * Redis SET pipeline with TTL (``cache_prepopulate/process.py:41-75``,
   ``caching/redis.py:32-101``, TTL 12 days).
 
-For the parquet store the upsert lives in streaming.ingest.upsert_batch
+For the parquet store the upsert is plans.main_pipeline.merge_upsert_store
 (dynamic partition overwrite — no external service needed).
 """
 

@@ -5,7 +5,8 @@ is an event-triggered batch (HTTP/Service-Bus/blob/timer), late data is
 handled by full-snapshot reprocessing, and revisions overwrite payloads
 for an existing (hash, partition_id) (``db_etl_upload/uploader.py:
 320-325``). The faithful Spark translation is a file-source
-``readStream`` + ``foreachBatch`` hash-upsert with
+``readStream`` + ``foreachBatch`` hash-upsert
+(``plans.main_pipeline.merge_upsert_store``) with
 ``Trigger.AvailableNow`` — each arriving release file becomes one
 idempotent micro-batch, exactly the reference's "blob landed, run the
 ETL" behaviour, with checkpointed exactly-once file tracking replacing
@@ -20,51 +21,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-
-def upsert_batch(
-    batch: DataFrame,
-    store_path: str,
-    key_cols: tuple[str, ...] = ("hash", "partition_id"),
-    order_col: str = "release_id",
-) -> None:
-    """Idempotent hash-upsert into a partitioned parquet store.
-
-    Parquet has no MERGE; the equivalent with identical semantics to the
-    reference's ``ON CONFLICT (hash, partition_id) DO UPDATE``:
-    read back only the partitions the batch touches, anti-join out rows
-    the batch replaces, union, and dynamically overwrite just those
-    partitions. On Delta/Iceberg this function becomes a single
-    ``MERGE INTO`` — the call-site contract is unchanged.
-    """
-    spark = batch.sparkSession
-    touched = [r["partition_id"] for r in batch.select("partition_id").distinct().collect()]
-    try:
-        existing = spark.read.parquet(store_path).filter(
-            F.col("partition_id").isin(touched)
-        )
-        keep = existing.join(
-            batch.select(*key_cols).distinct(), on=list(key_cols), how="left_anti"
-        )
-        merged = keep.unionByName(batch, allowMissingColumns=True)
-    except AnalysisException as exc:
-        # ONLY a genuinely absent store means "first write" — any other
-        # read failure (transient FS error, corrupt footer, permission
-        # blip) must propagate: falling through to merged = batch would
-        # dynamically OVERWRITE the touched partitions with just the
-        # batch's rows, silently deleting every pre-existing row there
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        merged = batch
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(store_path)
-    )
 
 
 def stream_release_files(
@@ -82,7 +40,8 @@ def stream_release_files(
     ``transform`` is any composition of the engine's operators (they are
     plain DataFrame -> DataFrame functions, so batch pipelines reuse
     unchanged); ``sink`` receives (batch_df, batch_id) — pass a closure
-    over ``upsert_batch`` for the serving store.
+    over ``plans.main_pipeline.merge_upsert_store`` for the serving
+    store.
     """
     stream = (
         spark.readStream.format(fmt)
@@ -153,11 +112,15 @@ def cdc_apply_batch(
 
     First batch bootstraps an empty snapshot with the batch's value
     columns. The merged frame is eagerly materialised BEFORE the
-    overwrite — its plan reads the store path it is about to replace.
+    overwrite — its plan reads the store path it is about to replace —
+    and its checkpoint blocks are released once the write finishes, so
+    a long-running stream pins no snapshot between batches.
     On Delta/Iceberg this becomes MERGE INTO; the call-site contract
     is unchanged.
     """
+    from ..functions.graph import _release_rdds, checkpoint_pinned
     from ..operators.asof import apply_changes
+    from ..sources.dump_load import read_parquet_if_present
 
     if seq_guard not in ("error", "skip", "off"):
         raise ValueError(
@@ -171,17 +134,8 @@ def cdc_apply_batch(
         )
     seq_type = batch.schema[seq_col].dataType
     spark = batch.sparkSession
-    try:
-        snapshot = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        # same rule as upsert_batch: ONLY a genuinely absent store
-        # means "first write" — any other read failure must propagate
-        # (treating it as first-write would overwrite the whole store
-        # with one batch's rows)
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(
-            exc
-        ):
-            raise
+    snapshot = read_parquet_if_present(spark.read, store_path)
+    if snapshot is None:
         snapshot = batch.drop(seq_col, op_col, *tiebreak_cols).limit(0)
     if CDC_SEQ_STATE not in snapshot.columns:
         # pre-guard store (or first-batch bootstrap): unknown
@@ -270,8 +224,11 @@ def cdc_apply_batch(
         delete_op=delete_op,
         tiebreak_cols=list(tiebreak_cols),
     )
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(store_path)
+    merged, merged_ids = checkpoint_pinned(merged)
+    try:
+        merged.write.mode("overwrite").parquet(store_path)
+    finally:
+        _release_rdds(spark.sparkContext, merged_ids)
 
 
 def index_upsert_batch(

@@ -432,8 +432,8 @@ def test_trim_sides_trailing_nulls_drop(spark):
 
 
 def test_merge_upsert_store_semantics(spark, tmp_path):
-    """merge_upsert_store (main_pipeline.py): first write falls through
-    to write_store; a later batch updates conflicting hashes, inserts
+    """merge_upsert_store (main_pipeline.py): first write (missing path
+    or empty directory) falls through to write_store; a later batch updates conflicting hashes, inserts
     new ones, leaves untouched partitions' files alone, and dedups
     in-batch identities by max payload string; the affected-partition
     guard raises loudly."""
@@ -481,3 +481,11 @@ def test_merge_upsert_store_semantics(spark, tmp_path):
 
     with pytest.raises(ValueError, match="partitions"):
         merge_upsert_store(batch, path, max_affected_partitions=0)
+
+    # an existing EMPTY directory is an absent store too: bootstrap
+    empty = tmp_path / "empty_store"
+    empty.mkdir()
+    merge_upsert_store(base, str(empty))
+    assert sorted(
+        (r.hash, r.partition_id) for r in spark.read.parquet(str(empty)).collect()
+    ) == [("h1", "p0"), ("h2", "p0"), ("h3", "p1")]

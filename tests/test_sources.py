@@ -128,6 +128,8 @@ def test_dump_load_roundtrip(spark, tmp_path):
     typed nulls), and merge_upsert must apply ON CONFLICT semantics."""
     from datetime import datetime, timezone
 
+    import pytest
+
     from coronavirus_dashboard_pipeline_etl_spark.sources.dump_load import (
         dump_table,
         load_dump,
@@ -168,6 +170,13 @@ def test_dump_load_roundtrip(spark, tmp_path):
     assert set(merged) == {1, 2, 3, 4}
     assert merged[2]["name"] == "beta2" and merged[2]["score"] == 9.0
     assert merged[1]["name"] == "alpha"  # untouched rows survive
+
+    # a column-set mismatch raises, naming the columns, instead of
+    # silently dropping the extra incoming column
+    with pytest.raises(ValueError, match="only in incoming: \\['extra'\\]"):
+        merge_upsert(back, incoming.withColumn("extra", F.lit(1)), ["id"])
+    with pytest.raises(ValueError, match="only in existing: \\['logged'\\]"):
+        merge_upsert(back, incoming.drop("logged"), ["id"])
 
 
 def test_path_metadata_input_file_routing(spark, tmp_path):

@@ -11,9 +11,11 @@ from coronavirus_dashboard_pipeline_etl_spark.functions.multimodal import (
     decode_images,
     sample_frames,
 )
+from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+    merge_upsert_store,
+)
 from coronavirus_dashboard_pipeline_etl_spark.streaming.ingest import (
     stream_release_files,
-    upsert_batch,
 )
 
 SCHEMA = "hash string, partition_id string, payload string, release_id long"
@@ -34,7 +36,7 @@ def test_streaming_upsert_roundtrip(spark, tmp_path):
     )
 
     def sink(batch, batch_id):
-        upsert_batch(batch, str(store))
+        merge_upsert_store(batch, str(store))
 
     q = stream_release_files(
         spark, str(inp), str(chk),
@@ -45,13 +47,15 @@ def test_streaming_upsert_roundtrip(spark, tmp_path):
     first = {r["hash"]: r for r in spark.read.parquet(str(store)).collect()}
     assert set(first) == {"a", "b"}
 
-    # second file REVISES hash 'a' (same (hash, partition)) and adds 'c'
+    # second file REVISES hash 'a' (same (hash, partition)) twice in
+    # one micro-batch — the max payload wins, one row lands — and adds 'c'
     (inp / "r2.json").write_text(
         "\n".join(
             json.dumps(x)
             for x in [
                 {"hash": "a", "partition_id": "other", "payload": '{"value":9}', "release_id": 2},
                 {"hash": "c", "partition_id": "other", "payload": '{"value":3}', "release_id": 2},
+                {"hash": "a", "partition_id": "other", "payload": '{"value":5}', "release_id": 2},
             ]
         )
     )
@@ -61,8 +65,9 @@ def test_streaming_upsert_roundtrip(spark, tmp_path):
         sink=sink, schema=SCHEMA,
     )
     q2.awaitTermination(60)
-    rows = {r["hash"]: r for r in spark.read.parquet(str(store)).collect()}
-    assert set(rows) == {"a", "b", "c"}
+    collected = spark.read.parquet(str(store)).collect()
+    rows = {r["hash"]: r for r in collected}
+    assert set(rows) == {"a", "b", "c"} and len(collected) == 3
     assert rows["a"]["payload"] == '{"value":9}'       # revised in place
     assert rows["a"]["release_id"] == 2
     assert rows["b"]["payload"] == '{"value":2}'       # untouched partition survives
@@ -1598,6 +1603,37 @@ def test_streaming_cdc_apply_matches_batch(spark, tmp_path):
     }
     assert got == expected
     assert (3, 34.0) in got and (1, 11.0) not in got and (2, 22.0) in got
+
+
+def test_cdc_apply_batch_releases_checkpoint(spark, tmp_path):
+    """cdc_apply_batch materialises the merged snapshot before the
+    overwrite; its checkpoint blocks must be released once the write
+    finishes, so repeated micro-batches pin nothing — nor does a batch
+    the seq guard rejects during that materialisation."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from coronavirus_dashboard_pipeline_etl_spark.functions.graph import (
+        _persistent_rdd_ids,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.streaming.ingest import (
+        cdc_apply_batch,
+    )
+
+    sc = spark.sparkContext
+    store = str(tmp_path / "cdc")
+    schema = "id long, val double, seq long, op string"
+    before = _persistent_rdd_ids(sc)
+    for rows in ([(1, 1.0, 1, "I"), (2, 2.0, 1, "I")], [(1, 3.0, 2, "U")]):
+        cdc_apply_batch(spark.createDataFrame(rows, schema), store, keys=("id",))
+    with pytest.raises((SparkRuntimeException, Py4JJavaError), match="out of order"):
+        cdc_apply_batch(
+            spark.createDataFrame([(1, 9.0, 1, "U")], schema), store, keys=("id",)
+        )
+    if before is not None:  # backend exposes the block registry
+        assert _persistent_rdd_ids(sc) == before
+    got = {(r.id, r.val) for r in spark.read.parquet(store).collect()}
+    assert got == {(1, 3.0), (2, 2.0)}
 
 
 def test_cdc_apply_batch_seq_guard(spark, tmp_path):
